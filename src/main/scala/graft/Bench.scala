@@ -41,14 +41,8 @@ object Bench {
     // whole aggregate towers (an audit found 22 queries losing structure;
     // ns_triangles benched 2 of its 26 joins). The noop write executes
     // the query exactly as a consumer reading its rows would.
-    // SPARK_GRAFT_ACTION=count restores the rounds-1..7 action for
-    // series-bridging runs ONLY (one dual-action anchor per series
-    // change, recorded in README "Benchmarking notes"); the driver never
-    // sets it, so official rounds stay on the honest noop action.
-    val action = sys.env.getOrElse("SPARK_GRAFT_ACTION", "noop")
     def run(df: org.apache.spark.sql.DataFrame): Unit =
-      if (action == "count") { df.count(); () }
-      else df.write.format("noop").mode("overwrite").save()
+      df.write.format("noop").mode("overwrite").save()
     ordered.foreach { case (_, fn) =>
       try { run(fn(spark, sfDir)) } catch { case _: Throwable => }
     }
@@ -90,13 +84,12 @@ object Bench {
       catch { case e: Throwable =>
         s""","streaming":{"error":"${e.getClass.getSimpleName}"}"""
       }
-    val actionJson = if (action == "noop") "" else s""","action":"$action""""
     val compact = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":${
       slowest.map { case (k, v) => "\"" + k + "\":" + jnum(v) }.mkString("{", ",", "}")
-    },"sf":"$sfName","n_queries":${results.size}$failedJson$streaming$actionJson}"""
+    },"sf":"$sfName","n_queries":${results.size}$failedJson$streaming}"""
     val full = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","queries":${
       results.map { case (k, v) => "\"" + k + "\":" + jnum(v) }.mkString("{", ",", "}")
-    },"sf":"$sfName"$failedJson$streaming$actionJson}"""
+    },"sf":"$sfName"$failedJson$streaming}"""
     println(compact)
     println(full)
     println(compact)

@@ -1833,16 +1833,13 @@ object Curation {
     * Scale shape: judgments reduce ONCE, to oriented pair counts
     * (partial-agg; wins, games, and the unordered pair frame all derive
     * from that pair-sized frame); each round is one skill join per pair side + one
-    * item-keyed partial-agg sum + a broadcast one-row max — all frames
-    * item- or pair-sized, never judgment-sized. Loop discipline
-    * (SCALE.md "Iterative operators"): each round references the previous
-    * skills TWICE (both pair endpoints) and its own raw frame twice (the
-    * max-norm), so skills localCheckpoint per round — a cache would grow
-    * the LOGICAL plan ~8× per round and the plan STRING geometrically —
-    * with superseded checkpoint blocks released via
-    * `bridge.unpersistLocalCheckpoint`. The returned frame is itself a
-    * LOCAL CHECKPOINT (materialized inside the call; blocks are
-    * ContextCleaner-collected once unreferenced).
+    * item-keyed partial-agg sum + a max-norm — all frames
+    * item- or pair-sized, never judgment-sized. Each round references the
+    * previous skills TWICE (both pair endpoints), so the raw skills
+    * checkpoint per round through [[Loops.materialize]], whose probe
+    * carries the max-norm's max — a cache would grow the LOGICAL plan
+    * geometrically. The returned frame is a local checkpoint; release it
+    * with [[Loops.release]] once consumed.
     *
     * Output: (item, wins, games, skill_micro), one row per item ever
     * judged. No rank column by design — ordering is `ORDER BY skill_micro
@@ -1878,7 +1875,8 @@ object Curation {
       .select(col("item"), coalesce(col("wins"), lit(0L)).as("wins"), col("games"))
       .persist()
 
-    var cur = base.select(col("item"), lit(M).as("s")).localCheckpoint(true)
+    var cur = base.select(col("item"), lit(M).as("s"))
+    var held = Seq.empty[DataFrame] // the checkpoint `cur` reads
     for (_ <- 1 to iters) {
       val sa = cur.select(col("item").as("a"), col("s").as("__sa"))
       val sb = cur.select(col("item").as("b"), col("s").as("__sb"))
@@ -1892,34 +1890,24 @@ object Curation {
       val denom = terms.select(col("a").as("item"), col("t"))
         .union(terms.select(col("b").as("item"), col("t")))
         .groupBy("item").agg(sum(col("t").cast(dec)).as("d"))
-      // raw persists (cache, not checkpoint: its lineage is one shallow
-      // round body over the checkpointed cur) because the max-norm
-      // references it twice; the round's eager checkpoint materializes it
       val raw = base.join(denom, Seq("item"), "left")
         .select(col("item"),
           when(coalesce(col("d"), lit(0L).cast(dec)) > 0,
             idiv((col("wins") * M).cast(dec) * lit(M).cast(dec), col("d")))
             .otherwise(lit(0L)).as("r"))
-        .persist()
-      // broadcast one-row max-norm (never 0 while any judgment exists:
-      // some item won, its denominator is positive, its raw is positive)
-      val mx = raw.agg(max(col("r")).as("__mx"))
-      val next = raw.crossJoin(broadcast(mx))
-        .select(col("item"), idiv(col("r") * M, greatest(col("__mx"), lit(1L)))
-          .as("s"))
-        .localCheckpoint(true)
-      raw.unpersist()
-      org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(cur)
-      cur = next
+      // the max-norm's max is the round's materializing probe (never 0
+      // while any judgment exists: some item won, its denominator is
+      // positive, its raw is positive)
+      val (rawCp, probe) = Loops.materialize(raw, max(col("r")))
+      Loops.release(held: _*)
+      held = Seq(rawCp)
+      val mx = if (probe.isNullAt(0)) 1L else math.max(probe.getLong(0), 1L)
+      cur = rawCp.select(col("item"), idiv(col("r") * M, lit(mx)).as("s"))
     }
-    // checkpoint the RESULT before releasing the final round's blocks —
-    // the seedDistance contract (the result must not alias released
-    // storage; a cache would stay recomputable-from-lineage into
-    // destroyed blocks)
-    val out = base.join(cur, "item")
-      .select(col("item"), col("wins"), col("games"), col("s").as("skill_micro"))
-      .localCheckpoint(true)
-    org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(cur)
+    // the result reads the last round's blocks: materialize it first
+    val (out, _) = Loops.materialize(base.join(cur, "item")
+      .select(col("item"), col("wins"), col("games"), col("s").as("skill_micro")))
+    Loops.release(held: _*)
     oriented.unpersist(); pairs.unpersist(); base.unpersist()
     out
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -843,55 +843,39 @@ object Dedup {
     * same.
     *
     * Output: (id, component) for every id appearing in `pairs`, where
-    * component = the minimum id reachable. The returned frame is a LOCAL
-    * CHECKPOINT (lineage truncated — recomputing would otherwise replay
-    * the whole loop; non-reliable storage, so on a real cluster executor
-    * loss after the call means re-running the operator): its blocks are
-    * collected by the ContextCleaner once the frame is unreferenced, or
-    * release them eagerly with `bridge.unpersistLocalCheckpoint` after
-    * consuming — plain `.unpersist()` does NOT touch checkpoint blocks.
-    * Superseded per-round frames are released inside the loop.
+    * component = the minimum id reachable. The returned frame is a local
+    * checkpoint; release it with [[Loops.release]] once consumed.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val edges = pairs.select(col("idA").as("a"), col("idB").as("b"))
       .union(pairs.select(col("idB").as("a"), col("idA").as("b")))
       .cache()
-    var labels = edges.select(col("a").as("id")).distinct()
-      .withColumn("component", col("id")).cache()
     // type-agnostic convergence fingerprint: labels only ever decrease, so
     // the (id, component) set changes iff any label changed — xor-folded
     // row hashes detect that for string/negative/any-typed ids (a plain
     // sum(component) would break on non-numeric ids; summing hashes
-    // overflows under ANSI; xor is order-independent and overflow-free)
-    def labelFingerprint(df: DataFrame): Long = {
-      val v = df.agg(bit_xor(xxhash64(col("id"), col("component")))).collect()(0)
-      if (v.isNullAt(0)) 0L else v.getLong(0)
-    }
+    // overflows under ANSI; xor is order-independent and overflow-free).
+    // It is each round's materializing probe.
+    val fingerprint = bit_xor(xxhash64(col("id"), col("component")))
+    val (initial, initialProbe) = Loops.materialize(
+      edges.select(col("a").as("id")).distinct().withColumn("component", col("id")),
+      fingerprint, count(lit(1)))
+    var labels = initial
     var iter = 0
-    var converged = labels.isEmpty // empty pair graph: nothing to propagate
-    var prevFp = if (converged) 0L else labelFingerprint(labels)
+    var converged = initialProbe.getLong(1) == 0L // empty pair graph
+    var prevFp = fingerprintOf(initialProbe)
     while (!converged && iter < maxIter) {
       val viaNeighbors = edges
         .join(labels.select(col("id").as("b"), col("component")), "b")
         .select(col("a").as("id"), col("component"))
       // each round references `labels` TWICE (the union and the join), so
-      // the logical plan doubles per round — the loop-lineage rule: cache
-      // does NOT truncate lineage, checkpoint does. Without this, round
-      // r's plan carries 2^r copies of the pair-generation subtree, and
-      // merely RENDERING it (explainString for the SQL listener fires on
-      // every action, UI on or off) allocates geometrically — the 100×
-      // ScaleProbe run OOMed the driver exactly there.
-      val next = labels.union(viaNeighbors)
-        .groupBy("id").agg(min(col("component")).as("component"))
-        .localCheckpoint(true)
-      val nextFp = labelFingerprint(next)
-      // round 0's frame is a cache() (unpersist releases it); later rounds
-      // are local checkpoints, whose blocks Dataset.unpersist does NOT
-      // touch — release them explicitly or the block manager accumulates
-      // one dead label frame per round
-      labels.unpersist()
-      org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(labels)
+      // the logical plan doubles per round unless every round checkpoints
+      val (next, probe) = Loops.materialize(
+        labels.union(viaNeighbors).groupBy("id").agg(min(col("component")).as("component")),
+        fingerprint)
+      Loops.release(labels)
       labels = next
+      val nextFp = fingerprintOf(probe)
       converged = nextFp == prevFp
       prevFp = nextFp
       iter += 1
@@ -906,6 +890,10 @@ object Dedup {
           "star-contraction variant for deep-chain graphs")
     labels
   }
+
+  /** A `bit_xor` fingerprint probe's value; an empty frame folds to 0. */
+  private def fingerprintOf(probe: Row): Long =
+    if (probe.isNullAt(0)) 0L else probe.getLong(0)
 
   /** Two-phase star connected components (Kiveris et al., "Connected
     * Components in MapReduce and Beyond", SoCC'14): alternate
@@ -929,7 +917,8 @@ object Dedup {
     * cheaper per-round choice when clusters are known-shallow (near-dup
     * graphs with bounded chain length).
     *
-    * Returned frame is cached; `.unpersist()` it once consumed.
+    * The returned frame is a local checkpoint; release it with
+    * [[Loops.release]] once consumed.
     */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 50): DataFrame =
     connectedComponentsStarWithRounds(pairs, maxIter)._1
@@ -944,19 +933,18 @@ object Dedup {
     // canonical (larger a, smaller b), self-loops dropped, deduped: the
     // star operations are neighborhood-set operations, multiplicity only
     // costs shuffle bytes
-    var e = pairs
+    val canonical = pairs
       .select(greatest(col("idA"), col("idB")).as("a"),
         least(col("idA"), col("idB")).as("b"))
-      .where(col("a") =!= col("b")).distinct().cache()
-
-    def fingerprint(df: DataFrame): Long = {
-      val v = df.agg(bit_xor(xxhash64(col("a"), col("b")))).collect()(0)
-      if (v.isNullAt(0)) 0L else v.getLong(0)
-    }
-
+      .where(col("a") =!= col("b")).distinct()
+    // the edge set is stable iff its xor-folded row hash is (see
+    // [[connectedComponents]]); it is each round's materializing probe
+    val fingerprint = bit_xor(xxhash64(col("a"), col("b")))
+    val (initial, initialProbe) = Loops.materialize(canonical, fingerprint, count(lit(1)))
+    var e = initial
     var iter = 0
-    var converged = e.isEmpty // edgeless graph: every node is its own root
-    var prevFp = if (converged) 0L else fingerprint(e)
+    var converged = initialProbe.getLong(1) == 0L // edgeless: every node is its own root
+    var prevFp = fingerprintOf(initialProbe)
     while (!converged && iter < maxIter) {
       // large-star over the doubled neighborhood: u's closed minimum m ≤ u,
       // emitted edges (v, m) for v > u — already (larger, smaller) form
@@ -977,16 +965,12 @@ object Dedup {
         .union(large.join(smins, "a")
           .select(col("a"), col("m").as("b")))
         .distinct()
-      // each round references the previous frame many times (doubled
-      // neighborhood + two joins), so the LOGICAL plan grows geometrically
-      // — caching does not truncate lineage, checkpointing does. Local
-      // checkpoint suffices in one JVM; on a real cluster set a reliable
-      // spark.checkpoint.dir so executor loss cannot drop a round.
-      val cp = small.localCheckpoint(true)
-      val fp = fingerprint(cp)
-      e.unpersist() // round 0: cache; later rounds: no-op (checkpoint)
-      org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(e)
+      // the round references the previous frame many times (doubled
+      // neighborhood + two joins): checkpoint every round
+      val (cp, probe) = Loops.materialize(small, fingerprint)
+      Loops.release(e)
       e = cp
+      val fp = fingerprintOf(probe)
       converged = fp == prevFp
       prevFp = fp
       iter += 1
@@ -1000,20 +984,11 @@ object Dedup {
     val labels = e.select(col("a").as("id"), col("b").as("component"))
       .union(e.select(col("b").as("id"), col("b").as("component")))
       .groupBy("id").agg(min(col("component")).as("component"))
-    // checkpoint the RESULT, not cache it: a cached frame stays
-    // recomputable-from-lineage, and that lineage reads e's checkpoint
-    // blocks — which the releases below destroy. On a cluster a lost or
-    // evicted cached partition would then fail with "checkpoint block not
-    // found"; localCheckpoint(true) materializes `out` AND truncates its
-    // lineage first (the BFS-epilogue rule), making the leaf drop safe.
-    // Same return contract as [[connectedComponents]]: a checkpointed
-    // frame the context cleaner reclaims when the caller drops it.
-    val out = nodes
+    // the result reads e's blocks: materialize it before releasing them
+    val (out, _) = Loops.materialize(nodes
       .join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-      .localCheckpoint(true)
-    e.unpersist()
-    org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(e)
+      .select(col("id"), coalesce(col("component"), col("id")).as("component")))
+    Loops.release(e)
     nodes.unpersist()
     (out, iter)
   }
@@ -1022,11 +997,11 @@ object Dedup {
     * connected component of the verified candidate-pair graph. Docs in no
     * pair keep themselves. Output: (id, cluster_id) for every doc.
     *
-    * The result's lineage holds the cached component labels from
+    * The result reads the checkpointed component labels of
     * [[connectedComponents]] (small: one row per id in `pairs`); the
-    * context cleaner reclaims the cache when the frames are released —
-    * call connectedComponents directly if you need explicit unpersist
-    * control.
+    * context cleaner reclaims their blocks once the result is
+    * unreferenced — call connectedComponents directly and
+    * [[Loops.release]] its result for explicit control.
     */
   def clusterAssignments(docs: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
     // hybrid: near-dup pair graphs are almost always shallow, where label

@@ -1815,8 +1815,8 @@ object EvalMetrics {
       .select(col(idCol).cast("long").as("__sb_id"),
         col(textCol).as("__sb_text"),
         Curation.portableHash31(col(idCol).cast("long"), seed).as("__sb_h"))
-    // materialize the BUCKETED frame (eager local checkpoint — the BFS
-    // convention: blocks are ContextCleaner-collected once the returned
+    // materialize the BUCKETED frame (a local checkpoint via Loops —
+    // blocks are ContextCleaner-collected once the returned
     // frame is unreferenced, unlike a persist() which would leak in the
     // CacheManager on a lazily-consumed result): the counts job below
     // and the ring join's two sides all read the same materialized
@@ -1825,9 +1825,9 @@ object EvalMetrics {
     // principle — measured deterministic in-session, but the
     // materialization makes it a non-question) and the scan+hash runs
     // once instead of twice
-    val ranged = base.repartitionByRange(buckets, col("__sb_h"), col("__sb_id"))
-      .withColumn("__sb_bk", spark_partition_id())
-      .localCheckpoint(true)
+    val ranged = Loops.materialize(
+      base.repartitionByRange(buckets, col("__sb_h"), col("__sb_id"))
+        .withColumn("__sb_bk", spark_partition_id()))._1
     // single read: per-bucket counts (≤ buckets rows) supply the prefix
     // offsets, the corpus size n, the n ≥ 2 guard, AND the unique-id
     // guard — the alignScores single-read discipline. Ids MUST be unique

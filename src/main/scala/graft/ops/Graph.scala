@@ -334,24 +334,21 @@ object Graph {
     * anti-join per round; re-deriving distances each round from scratch
     * would be O(rounds × |E|).
     *
-    * Loop discipline (SCALE.md "Iterative operators"): the per-round
-    * localCheckpoint lands on the FRONTIER (the only frame the next round's
-    * join references); the distance table is a union of already-checkpointed
-    * frontier leaves, so referencing it twice (anti-join + result) re-reads
-    * caches, never recomputes, and the logical tree grows O(1) per round.
-    * The eager checkpoint doubles as the empty-frontier probe: BFS stops as
-    * soon as the reachable set is exhausted, so `maxHops` larger than the
-    * graph's diameter costs nothing.
+    * Each round checkpoints the FRONTIER through [[Loops.materialize]]
+    * (the only frame the next round's join references); the distance
+    * table is a union of already-checkpointed frontier leaves, so
+    * referencing it twice (anti-join + result) re-reads blocks, never
+    * recomputes. The materializing row count doubles as the
+    * empty-frontier probe: BFS stops as soon as the reachable set is
+    * exhausted, so `maxHops` larger than the graph's diameter costs
+    * nothing.
     *
     * Output: (node, hops) with hops in [0, maxHops], one row per reached
     * node. Unreached nodes are absent (left-join the node set and treat
     * null as "outside the radius" — materializing "infinity" rows would
     * make the output graph-sized even for a one-node seed set). The
-    * returned frame is a LOCAL CHECKPOINT (materialized before the per-hop
-    * frontier blocks — its former lineage leaves — are released inside the
-    * call; localCheckpoint data is unrecoverable once dropped). Its blocks
-    * are ContextCleaner-collected when the frame is unreferenced, or
-    * release eagerly via `bridge.unpersistLocalCheckpoint`.
+    * returned frame is a local checkpoint; release it with
+    * [[Loops.release]] once consumed.
     *
     * Duplicate edges: the loop is CORRECT under them (the per-round
     * frontier `distinct` absorbs dupes) and by default does NOT dedup —
@@ -372,42 +369,32 @@ object Graph {
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
     val e = (if (dedupEdges) e0.distinct() else e0).persist()
-    // LAZY checkpoint + count: the empty-frontier probe's own job
-    // materializes the checkpoint blocks (lineage truncates at job end), so
-    // each round runs ONE action instead of checkpoint-then-probe — the
-    // probe is synchronous, so the release order below is unchanged
-    var frontier = seeds.select(col(seedCol).as("node")).distinct()
-      .withColumn("hops", lit(0L)).localCheckpoint(false)
+    val (seedFrame, seedProbe) = Loops.materialize(
+      seeds.select(col(seedCol).as("node")).distinct().withColumn("hops", lit(0L)))
+    var frontier = seedFrame
     var dist = frontier
     var leaves: List[DataFrame] = frontier :: Nil
     var hop = 0
-    var exhausted = frontier.count() == 0L
+    var exhausted = seedProbe.getLong(0) == 0L
     while (hop < maxHops && !exhausted) {
       val reached = e
         .join(frontier.select(col("node").as("src")), Seq("src"), "left_semi")
         .select(col("dst").as("node")).distinct()
       val fresh = reached.join(dist, Seq("node"), "left_anti")
         .withColumn("hops", lit(hop + 1L))
-      val cp = fresh.localCheckpoint(false)
-      exhausted = cp.count() == 0L
+      val (cp, probe) = Loops.materialize(fresh)
+      exhausted = probe.getLong(0) == 0L
       if (!exhausted) {
         dist = dist.union(cp)
         leaves ::= cp
         frontier = cp
-      } else {
-        cp.unpersist()
-        org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(cp)
-      }
+      } else Loops.release(cp)
       hop += 1
     }
-    // materialize the result as its OWN local checkpoint BEFORE releasing
-    // the per-hop frontiers: `dist` is the union of every round's
-    // checkpointed frontier, so the result must stop referencing their
-    // blocks first. (A persist()+count() is not enough: when maxHops=0 the
-    // result IS the hop-0 frame, and releasing that leaf would drop the
-    // result's own storage.)
-    val out = dist.localCheckpoint(true)
-    leaves.foreach(org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(_))
+    // the result is a union of the per-hop leaves: materialize it before
+    // releasing them
+    val (out, _) = Loops.materialize(dist)
+    Loops.release(leaves: _*)
     e.unpersist()
     out
   }
@@ -426,9 +413,8 @@ object Graph {
     * shortest-path seed is the min over its shortest-path predecessors'
     * labels (every seed with a shortest path to the node shortest-reaches
     * some predecessor one hop earlier). Per-round work gains only the
-    * min aggregate; state stays node-sized. The returned frame is a LOCAL
-    * CHECKPOINT (the per-hop frontier blocks drop inside the call;
-    * ContextCleaner collects the result's blocks once unreferenced).
+    * min aggregate; state stays node-sized. The returned frame is a local
+    * checkpoint; release it with [[Loops.release]] once consumed.
     *
     * Duplicate edges: correct without dedup (the per-round min(seed)
     * aggregate is duplicate-insensitive), but cache footprint and
@@ -445,41 +431,31 @@ object Graph {
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .where(col("src").isNotNull && col("dst").isNotNull)
     val e = (if (dedupEdges) e0.distinct() else e0).persist()
-    // lazy checkpoint + count probe: one action per round (see
-    // [[seedDistance]] — the probe job materializes the checkpoint)
-    var frontier = seeds.select(col(seedCol).as("node")).distinct()
-      .withColumn("hops", lit(0L)).withColumn("seed", col("node"))
-      .localCheckpoint(false)
+    val (seedFrame, seedProbe) = Loops.materialize(
+      seeds.select(col(seedCol).as("node")).distinct()
+        .withColumn("hops", lit(0L)).withColumn("seed", col("node")))
+    var frontier = seedFrame
     var dist = frontier
     var leaves: List[DataFrame] = frontier :: Nil
     var hop = 0
-    var exhausted = frontier.count() == 0L
+    var exhausted = seedProbe.getLong(0) == 0L
     while (hop < maxHops && !exhausted) {
       val reached = e
         .join(frontier.select(col("node").as("src"), col("seed")), Seq("src"))
         .groupBy(col("dst").as("node")).agg(min(col("seed")).as("seed"))
       val fresh = reached.join(dist, Seq("node"), "left_anti")
         .select(col("node"), lit(hop + 1L).as("hops"), col("seed"))
-      val cp = fresh.localCheckpoint(false)
-      exhausted = cp.count() == 0L
+      val (cp, probe) = Loops.materialize(fresh)
+      exhausted = probe.getLong(0) == 0L
       if (!exhausted) {
         dist = dist.union(cp)
         leaves ::= cp
         frontier = cp
-      } else {
-        cp.unpersist()
-        org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(cp)
-      }
+      } else Loops.release(cp)
       hop += 1
     }
-    // materialize the result as its OWN local checkpoint BEFORE releasing
-    // the per-hop frontiers: `dist` is the union of every round's
-    // checkpointed frontier, so the result must stop referencing their
-    // blocks first. (A persist()+count() is not enough: when maxHops=0 the
-    // result IS the hop-0 frame, and releasing that leaf would drop the
-    // result's own storage.)
-    val out = dist.localCheckpoint(true)
-    leaves.foreach(org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(_))
+    val (out, _) = Loops.materialize(dist)
+    Loops.release(leaves: _*)
     e.unpersist()
     out
   }
@@ -778,12 +754,14 @@ object Graph {
     * [[graft.ops.Dedup.connectedComponentsStar]]; LPA splits DENSE
     * subregions apart where CC would fuse everything reachable.
     *
-    * Loop discipline (SCALE.md): labels are node-sized, localCheckpointed
-    * per round (the round references the frame in the join AND the
-    * isolated-node coalesce). Each round = one edge-sized join + one
-    * (node, label) partial-agg count + one argmax partial agg.
+    * Labels are node-sized and checkpointed per round through
+    * [[Loops.materialize]] (the round references the frame in the join
+    * AND the isolated-node coalesce). Each round = one edge-sized join +
+    * one (node, label) partial-agg count + one argmax partial agg.
     *
-    * Output: (node, label) — nodes sharing a label are one community.
+    * Output: (node, label) — nodes sharing a label are one community. The
+    * returned frame is a local checkpoint; release it with
+    * [[Loops.release]] once consumed.
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       rounds: Int = 3): DataFrame = {
@@ -794,9 +772,9 @@ object Graph {
       .distinct().persist()
     val nbrs = und.select(col("u").as("n"), col("v").as("nb"))
       .union(und.select(col("v").as("n"), col("u").as("nb")))
-    var labels = und.select(col("u").as("node")).union(und.select(col("v").as("node")))
-      .distinct().withColumn("label", col("node"))
-      .localCheckpoint(true)
+    var labels = Loops.materialize(
+      und.select(col("u").as("node")).union(und.select(col("v").as("node")))
+        .distinct().withColumn("label", col("node")))._1
     var r = 0
     while (r < rounds) {
       val nbrLabels = nbrs
@@ -807,9 +785,8 @@ object Graph {
       val next = labels
         .join(winners.withColumnRenamed("n", "node"), Seq("node"), "left")
         .select(col("node"), coalesce(col("__new"), col("label")).as("label"))
-      val cp = next.localCheckpoint(true)
-      labels.unpersist() // no-op past round 0 — release the checkpoint too
-      org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(labels)
+      val cp = Loops.materialize(next)._1
+      Loops.release(labels)
       labels = cp
       r += 1
     }
@@ -824,13 +801,13 @@ object Graph {
     * domains" crawl policies ([[triangles]] measures local density;
     * k-core keeps the globally cohesive part).
     *
-    * Loop discipline (SCALE.md "Iterative operators"): each round
-    * references the edge frame three times (doubled neighborhood + two
-    * semi-joins), so every round localCheckpoints — lineage stays
-    * O(round body) — and the convergence probe is the edge COUNT, which
-    * is monotone decreasing and strictly drops while any node peels
-    * (every peeled node carries >= 1 remaining edge), so equal counts ==
-    * fixed point with no fingerprint pass. Worst case is O(n) rounds on
+    * Each round references the edge frame three times (doubled
+    * neighborhood + two semi-joins), so every round checkpoints through
+    * [[Loops.materialize]] — lineage stays O(round body) — and the
+    * materializing probe is the edge COUNT, which is monotone decreasing
+    * and strictly drops while any node peels (every peeled node carries
+    * >= 1 remaining edge), so equal counts == fixed point with no
+    * fingerprint pass. Worst case is O(n) rounds on
     * degenerate chains (peeling's inherent depth — a path with k = 2
     * sheds only its two endpoints per round); `maxRounds` fails loudly
     * rather than looping silently. Each round is two partial-agg counts
@@ -839,7 +816,8 @@ object Graph {
     *
     * Output: (node, deg) for k-core members, deg = degree WITHIN the
     * core (>= k by construction). Empty output = the graph has no
-    * k-core.
+    * k-core. The returned frame is a local checkpoint; release it with
+    * [[Loops.release]] once consumed.
     */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Long,
       maxRounds: Int = 50): DataFrame = {
@@ -848,12 +826,9 @@ object Graph {
       .where(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
       .select(least(col("a"), col("b")).as("u"), greatest(col("a"), col("b")).as("v"))
       .distinct()
-    // lazy checkpoint + count: the convergence count's own job materializes
-    // the checkpoint (one action per round instead of two); the count is
-    // synchronous, so the release below still happens only after the new
-    // round's blocks exist
-    var e = e0.localCheckpoint(false)
-    var n = e.count()
+    val (first, firstCount) = Loops.materialize(e0)
+    var e = first
+    var n = firstCount.getLong(0)
     var converged = n == 0
     var rounds = 0
     while (!converged && rounds < maxRounds) {
@@ -863,10 +838,9 @@ object Graph {
       val e2 = e
         .join(keep.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
         .join(keep.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-      val cp = e2.localCheckpoint(false)
-      val n2 = cp.count()
-      e.unpersist() // no-op for checkpoint rounds — release blocks too
-      org.apache.spark.sql.graft.bridge.unpersistLocalCheckpoint(e)
+      val (cp, probe) = Loops.materialize(e2)
+      val n2 = probe.getLong(0)
+      Loops.release(e)
       e = cp
       converged = n2 == n
       n = n2
@@ -876,8 +850,12 @@ object Graph {
       throw new IllegalStateException(
         s"kCore did not converge in $maxRounds rounds — degenerate chain-" +
           "heavy input; raise maxRounds (peeling depth is O(n) worst case)")
-    e.select(col("u").as("node")).union(e.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
+    // the node-sized result replaces the edge-sized final round
+    val (core, _) = Loops.materialize(
+      e.select(col("u").as("node")).union(e.select(col("v").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("deg")))
+    Loops.release(e)
+    core
   }
 
   /** Edge reciprocity of the directed simple graph: the fraction of

@@ -26,22 +26,4 @@ object bridge {
       builder: Seq[Expression] => Expression): Unit =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(name, info, builder)
-
-  /** Drop the block-manager storage behind a `localCheckpoint(true)`-ed
-    * frame. `Dataset.unpersist` only clears CacheManager entries; a local
-    * checkpoint persists its RDD directly (LocalRDDCheckpointData), so an
-    * iterative loop that keeps only the LAST round's frame accumulates one
-    * superseded frame's blocks per round until GC/ContextCleaner runs —
-    * at cluster scale that is rounds × frontier-size of dead executor
-    * memory. Call this on a round's frame ONLY once the next round has
-    * materialized and the frame will never be read again: the checkpoint
-    * IS the data (lineage was truncated), so unpersisting it makes the
-    * frame unrecomputable. No-op for frames that are not local
-    * checkpoints.
-    */
-  def unpersistLocalCheckpoint(df: org.apache.spark.sql.Dataset[_]): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
 }

@@ -292,37 +292,8 @@ class EmbeddingsSpec extends AnyFunSuite {
   test("job-count gate: kCenterSelect is linear in k (stateless rounds, no lineage growth)") {
     // mirrors GraphSpec's loop gates: each round is one TakeOrdered scan,
     // so jobs grow by a constant per added center
-    def countJobs(body: => Unit): Int = {
-      val group = s"graft-kcgate-${java.util.UUID.randomUUID().toString.take(8)}"
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          if (js.properties != null &&
-            group == js.properties.getProperty("spark.jobGroup.id"))
-            n.incrementAndGet()
-          ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      spark.sparkContext.setJobGroup(group, "kcenter job gate")
-      try {
-        body
-        var last = -1; var stable = 0; var waited = 0
-        while (stable < 3 && waited < 5000) {
-          Thread.sleep(100); waited += 100
-          val cur = n.get()
-          if (cur == last) stable += 1 else { stable = 0; last = cur }
-        }
-      } finally {
-        spark.sparkContext.clearJobGroup()
-        spark.sparkContext.removeSparkListener(listener)
-      }
-      assert(n.get() > 0, "job-group scoping captured no jobs")
-      n.get()
-    }
     import spark.implicits._
-    def run(k: Int): Int = countJobs {
+    def run(k: Int): Int = SparkTestBase.countJobs {
       val pts = (0 until 24)
         .map(i => (i.toLong, Seq((i * 37 % 24).toDouble, (i * 11 % 24).toDouble)))
         .toDF("id", "vec")

@@ -248,6 +248,39 @@ class GraphSpec extends AnyFunSuite {
     assert(d1 <= 40, s"per-round job cost out of bounds: j2=$j2 j4=$j4")
   }
 
+  test("job-count gate: label-propagation connectedComponents is linear in chain length") {
+    // min-label propagation needs one round per hop of the chain's
+    // diameter, so the chain length drives the round count
+    def run(len: Int): Int = countJobs {
+      val pairs = (0 until len)
+        .map(i => (i.toLong + 1000L * len, i.toLong + 1 + 1000L * len)).toDF("idA", "idB")
+      graft.ops.Dedup.connectedComponents(pairs).collect(); ()
+    }
+    val j2 = run(2)
+    val j4 = run(4)
+    val j6 = run(6)
+    val d1 = j4 - j2
+    val d2 = j6 - j4
+    assert(d2 <= d1 + 4,
+      s"connectedComponents job growth must be linear: j2=$j2 j4=$j4 j6=$j6")
+    assert(d1 <= 40, s"per-round job cost out of bounds: j2=$j2 j4=$j4")
+  }
+
+  test("job-count gate: bradleyTerry is linear in iters") {
+    def run(iters: Int): Int = countJobs {
+      val j = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (4L, 1L))
+        .map { case (w, l) => (w + 100L * iters, l + 100L * iters) }.toDF("winner", "loser")
+      graft.ops.Curation.bradleyTerry(j, "winner", "loser", iters = iters).collect(); ()
+    }
+    val j2 = run(2)
+    val j4 = run(4)
+    val j6 = run(6)
+    val d1 = j4 - j2
+    val d2 = j6 - j4
+    assert(d2 <= d1 + 4, s"bradleyTerry job growth must be linear: j2=$j2 j4=$j4 j6=$j6")
+    assert(d1 <= 40, s"per-round job cost out of bounds: j2=$j2 j4=$j4")
+  }
+
   test("job-count gate: star-contraction CC jobs stay proportional to executed rounds") {
     // the third iterative loop under the SCALE.md rule: a chain forces
     // multiple large/small-star rounds, and the per-round checkpoint must
